@@ -247,15 +247,13 @@ def canonicalize_by_url(quads_df):
 
     cols = ["url", "s", "p", "o", "g"]
     df = quads_df.select(*cols)
-    # r6: the input feeds THREE consumers (bnode-url scan, the anti-join
-    # passthrough and the semi-join c14n side) — without a checkpoint
-    # each consumer recomputes the full upstream (for extract pipelines:
-    # three complete parse passes, measured ~2 extra passes at sf0.1).
-    # A lazy localCheckpoint materializes it once inside the same job;
-    # at 100 TB one materialization strictly beats three recomputes.
-    df = df.localCheckpoint(eager=False)
+    # The input feeds three consumers (bnode-url scan, anti-join
+    # passthrough, semi-join c14n side).  It is not checkpointed here: a
+    # Python producer upstream (e.g. extract_quads) materializes its own
+    # output, and what is left to recompute is JVM work.
     has_bnode = (
         F.col("s").startswith("_:")
+        | F.col("p").startswith("_:")  # generalized quads
         | F.col("o").startswith("_:")
         | F.col("g").startswith("_:")
         | F.col("o").contains(" _:")  # bnodes inside triple terms
@@ -282,4 +280,7 @@ def canonicalize_by_url(quads_df):
     relabeled = needs_c14n.groupBy("url").applyInPandas(
         run, schema="url string, s string, p string, o string, g string"
     )
-    return passthrough.unionByName(relabeled)
+    # Materialized once where it is produced, so every sink shares one
+    # run of the blank-node joins and of RDFC.  A lost executor fails the
+    # job, as with the engine's other local checkpoints.
+    return passthrough.unionByName(relabeled).localCheckpoint(eager=False)

@@ -46,19 +46,20 @@ def connected_components(
     row as the new one, so "did anything change" is a filter over the
     just-checkpointed frame — no extra labels⋈labels join per round.
     """
-    und = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    # lazy: both materialize inside round 1's changed-count job; labels
+    # read the checkpointed und, so the edges upstream run once
+    und = (
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
     labels = (
         und.select(F.col("src").alias("member"))
         .distinct()
         .withColumn("comp", F.col("member"))
+        .localCheckpoint(eager=False)
     )
-    # r6: lazy — both materialize inside round 1's changed-count job
-    # (two fewer driver job barriers; every round still reads the
-    # materialized partitions)
-    und = und.localCheckpoint(eager=False)
-    labels = labels.localCheckpoint(eager=False)
 
     iters = 0
     for i in range(max_iter):

@@ -11,6 +11,14 @@ vectorized fast path per format across the batch, no per-row Python at
 the DataFrame API level.  Everything downstream is built-in DataFrame
 ops that Catalyst/AQE optimize (predicate pushdown, partial aggregation,
 broadcast).
+
+The parse output is materialized once per pass: ``extract_quads``
+returns the ``mapInPandas`` output behind a lazy ``localCheckpoint``, so
+every consumer (the quarantine split's good and bad sides, the sameAs
+edge scan, c14n, the sinks) reads the same materialized partitions
+instead of re-running the Python parse.  Like the engine's other local
+checkpoints, the cut keeps no lineage: losing an executor that holds
+checkpointed blocks fails the job rather than recomputing them.
 """
 
 from __future__ import annotations
@@ -132,7 +140,8 @@ def extract_quads(
                     )
             yield out
 
-    return src.mapInPandas(run, schema=QUADS_SCHEMA)
+    # materialized once per pass (see the module docstring)
+    return src.mapInPandas(run, schema=QUADS_SCHEMA).localCheckpoint(eager=False)
 
 
 _FAST_PRE_RE = re.compile(

@@ -173,6 +173,52 @@ class TestC14n:
         assert ("u1", "_:c14n0", "<p>", '"v"') in got or ("u1", "_:c14n1", "<p>", '"v"') in got
         assert ("u2", "_:c14n0", "<p>", '"v"') in got
 
+    def test_spark_canonicalize_by_url_c14n_error(self, spark):
+        # two identical 7-leaf stars exceed the poison-resistance limits:
+        # the whole url collapses to one error row, its plain quad
+        # included, and the clean url is untouched
+        star = [
+            ("poisoned", f"_:{c}", "<x:p>", f"_:{c}{i}", None)
+            for c in "ab"
+            for i in range(7)
+        ]
+        rows = star + [
+            ("poisoned", "<x:s>", "<x:p>", "<x:o>", None),
+            ("clean", "_:h", "<x:p>", '"v"', None),
+            ("clean", "<x:a>", "<x:p>", "<x:b>", None),
+        ]
+        df = spark.createDataFrame(
+            rows, "url string, s string, p string, o string, g string"
+        )
+        out = canonicalize_by_url(df).collect()
+        bad = [r for r in out if r["url"] == "poisoned"]
+        assert len(bad) == 1
+        assert (bad[0]["s"], bad[0]["p"], bad[0]["o"]) == (None, None, None)
+        assert bad[0]["g"].startswith("c14n-error:")
+        clean = {(r["s"], r["p"], r["o"], r["g"]) for r in out if r["url"] == "clean"}
+        assert clean == {
+            ("_:c14n0", "<x:p>", '"v"', None),
+            ("<x:a>", "<x:p>", "<x:b>", None),
+        }
+
+    def test_spark_canonicalize_by_url_predicate_bnode(self, spark):
+        # generalized quads: a blank node only in predicate position
+        # still routes its url through RDFC, alone or next to others
+        rows = [
+            ("alone", "<x:s>", "_:p", "<x:o>", None),
+            ("mixed", "<x:s>", "_:p", "<x:o>", None),
+            ("mixed", "_:b", "<x:q>", "<x:o>", None),
+        ]
+        df = spark.createDataFrame(
+            rows, "url string, s string, p string, o string, g string"
+        )
+        got = {(r["url"], r["s"], r["p"], r["o"]) for r in canonicalize_by_url(df).collect()}
+        assert got == {
+            ("alone", "<x:s>", "_:c14n0", "<x:o>"),
+            ("mixed", "<x:s>", "_:c14n1", "<x:o>"),
+            ("mixed", "_:c14n0", "<x:q>", "<x:o>"),
+        }
+
 
 class TestC14nHard:
     """Harder shapes exercising hash-n-degree (pure python, no Spark)."""

@@ -175,3 +175,22 @@ class TestDistributedLines:
         assert R.bindings_to_json(res) == small_json
         assert R.bindings_to_xml(res) == small_xml
         assert R.bindings_to_tsv(res) == small_tsv
+
+    def test_delegation_keeps_caller_cache(self, res, monkeypatch):
+        # the probe persists only frames it found uncached: a frame the
+        # caller cached must still be cached after a delegated render,
+        # and an uncached one must not be left cached
+        from pyspark import StorageLevel
+
+        import sophia_rs_spark.sparql.results as R
+
+        monkeypatch.setattr(R, "_DELEGATE_ROWS", 1)
+        cached = res.select("*").cache()
+        try:
+            R.bindings_to_json(cached)
+            R.bindings_to_xml(cached)
+            assert cached.storageLevel != StorageLevel.NONE
+        finally:
+            cached.unpersist()
+        R.bindings_to_json(res)
+        assert res.storageLevel == StorageLevel.NONE
