@@ -103,6 +103,8 @@ def sparql_breakdown():
         print("WHERE rows:", fresh_where().count())
 
         sc.setJobDescription("full query")
+        out = query(t, SPARQL_TEXT)  # the plan written below; each timed run
+        # collects a fresh DataFrame (see the NOTE above)
         timed("full query collect", lambda: query(t, SPARQL_TEXT).collect())
         with open(os.path.join(REPO, "plans", "r06", "sparql_full.txt"), "w") as f:
             f.write(out._jdf.queryExecution().explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))

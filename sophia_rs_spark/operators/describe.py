@@ -15,16 +15,21 @@ the DESCRIBE battery in `sparql/src/test.rs:2352-2455`):
   that triple in.
 
 Each round is a pair of semi-joins over the triples table keyed by the
-(small) frontier, so the loop is frontier-sized, not corpus-sized.
+(small) frontier, so a round is frontier-sized, not corpus-sized; the
+rounds run on the shared fixpoint driver (:mod:`.fixpoint`) until a
+round includes no new triple.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import cut, fixpoint
 
 
 def _tt_bnodes(enc: str, out: List[str]) -> None:
@@ -63,51 +68,45 @@ def _bnode_terms(df: DataFrame) -> DataFrame:
     return direct.unionByName(inside).distinct()
 
 
-def describe(triples: DataFrame, seeds: DataFrame, max_iter: int = 20) -> DataFrame:
-    """CBD of the seed terms (column ``term``) over triples (s, p, o)."""
-    visited = seeds.select(F.col("term")).distinct().localCheckpoint(eager=True)
-    frontier = visited
-    out = None
-    # triple terms of triples included in the previous round (for the
-    # reification pull); starts empty
-    prev_tts = None
-    for _ in range(max_iter):
-        parts = []
-        if frontier is not None:
-            parts.append(
-                triples.join(
-                    frontier.withColumnRenamed("term", "s"), "s", "left_semi"
-                )
-            )
-            parts.append(
-                triples.join(
-                    frontier.withColumnRenamed("term", "o"), "o", "left_semi"
-                )
-            )
-        if prev_tts is not None:
-            parts.append(triples.join(prev_tts, "o", "left_semi"))
-        step = parts[0]
-        for p in parts[1:]:
-            step = step.unionByName(p)
-        step = step.dropDuplicates(["s", "p", "o"])
+def describe(triples: DataFrame, seeds: DataFrame) -> DataFrame:
+    """CBD of the seed terms (column ``term``) over triples (s, p, o).
+
+    Round k includes the triples that mention a frontier term in s or
+    o, plus the reifications of round k-1's triples; the next frontier
+    is every blank node of round k's triples.  A blank node met again
+    was described when first met — its triples are already included —
+    so no visited set is kept: the anti-join against the included
+    triples drops the repeats."""
+
+    def step(state):
+        out, frontier, tts = state
+        parts = [
+            triples.join(frontier.withColumnRenamed("term", "s"), "s", "left_semi"),
+            triples.join(frontier.withColumnRenamed("term", "o"), "o", "left_semi"),
+        ]
+        if tts is not None:
+            parts.append(triples.join(tts, "o", "left_semi"))
+        new = reduce(DataFrame.unionByName, parts).dropDuplicates(["s", "p", "o"])
         if out is not None:
-            step = step.join(out, ["s", "p", "o"], "left_anti")
-        step = step.localCheckpoint(eager=True)
-        if step.isEmpty():
-            break
-        out = step if out is None else out.unionByName(step).localCheckpoint(eager=True)
-        # next round: new bnodes (incl. inside tts) + reification keys
-        bnodes = _bnode_terms(step)
-        new = bnodes.join(visited, "term", "left_anti").localCheckpoint(eager=True)
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new if not new.isEmpty() else None
-        prev_tts = step.select(
-            F.concat(
-                F.lit("<<( "), "s", F.lit(" "), "p", F.lit(" "), "o", F.lit(" )>>")
-            ).alias("o")
-        ).distinct()
-        if frontier is None and prev_tts is None:
-            break
+            new = new.join(out, ["s", "p", "o"], "left_anti")
+
+        def advance(done, row):
+            if not row["n"]:
+                return None
+            # the triple terms of the included triples, for the
+            # reification pull
+            tts = done.select(
+                F.concat(
+                    F.lit("<<( "), "s", F.lit(" "), "p", F.lit(" "), "o", F.lit(" )>>")
+                ).alias("o")
+            ).distinct()
+            out_next = done if out is None else out.unionByName(done)
+            return out_next, _bnode_terms(done), tts
+
+        return new, [F.count(F.lit(1)).alias("n")], advance
+
+    out = fixpoint(step, (None, cut(seeds.select("term").distinct()), None))[0]
     if out is None:
         return triples.limit(0).select("s", "p", "o")
-    return out.select("s", "p", "o").dropDuplicates(["s", "p", "o"])
+    # the rounds' parts are disjoint and each is distinct on (s, p, o)
+    return out.select("s", "p", "o")

@@ -6,17 +6,19 @@ member is rewritten to the component's canonical id (the minimum member
 in canonical-string order — deterministic, cluster-size-independent).
 
 Algorithm: iterative min-label propagation over the symmetrized edge
-list — a driver-side loop of DataFrame joins with ``localCheckpoint``
-per iteration to cut lineage (SURVEY.md §4 "iterative fixpoints").
-Iterations = O(longest chain); sameAs chains in web data are short.
-At 100 TB scale the same loop applies with persisted intermediate
-tables; AQE handles the shrinking frontier.
+list, one DataFrame join step per round on the shared driver in
+:mod:`.fixpoint` (lineage cuts, one action per round, no round cap).
+Rounds = O(longest chain); sameAs chains in web data are short, and
+:func:`connected_components_alternating` covers the long-chain case in
+O(log n) rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import cut, fixpoint
 
 OWL_SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 
@@ -28,12 +30,13 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    checkpoint_every: int = 1,
-    stats: dict | None = None,
-) -> DataFrame:
+def _symmetrized(edges: DataFrame) -> DataFrame:
+    return edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """(src, dst) undirected edges → (member, comp) with comp = min member
     of the component (canonical-string order).
 
@@ -43,55 +46,35 @@ def connected_components(
     Deterministic for any partitioning: min is order-insensitive.
 
     Convergence probe is free: the old label rides along in the same
-    row as the new one, so "did anything change" is a filter over the
-    just-checkpointed frame — no extra labels⋈labels join per round.
+    row as the new one, so "did anything change" is a sum over the
+    round's cut frame — no extra labels⋈labels join per round.
     """
-    # lazy: both materialize inside round 1's changed-count job; labels
-    # read the checkpointed und, so the edges upstream run once
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        und.select(F.col("src").alias("member"))
-        .distinct()
-        .withColumn("comp", F.col("member"))
-        .localCheckpoint(eager=False)
-    )
+    # both cuts land inside round 1's job; labels read the cut und, so
+    # the edges upstream run once
+    und = cut(_symmetrized(edges).distinct())
+    members = und.select(F.col("src").alias("member")).distinct()
+    labels = cut(members.withColumn("comp", F.col("member")))
 
-    iters = 0
-    for i in range(max_iter):
-        iters = i + 1
+    def step(labels):
         # neighbor minimum: for each vertex, min comp among its neighbors
         nbr_min = (
             und.join(labels, und["dst"] == labels["member"], "inner")
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        stepped = (
-            labels.join(nbr_min, labels["member"] == nbr_min["src"], "left_outer")
-            .select(
-                "member",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-                F.col("comp").alias("_prev"),
-            )
-            # lazy: materialized by the changed-count job below — ONE
-            # driver action per round, not two (checkpoint + isEmpty)
-            .localCheckpoint(eager=False)
+        stepped = labels.join(
+            nbr_min, labels["member"] == nbr_min["src"], "left_outer"
+        ).select(
+            "member",
+            F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
+            F.col("comp").alias("_prev"),
         )
-        labels = stepped.select("member", "comp")
-        changed = stepped.agg(
-            F.sum((F.col("comp") != F.col("_prev")).cast("int")).alias("c")
-        ).first()["c"]
-        if not changed:
-            break
-    if stats is not None:
-        stats["iterations"] = iters
-    return labels.select("member", "comp")
+        changed = F.sum((F.col("comp") != F.col("_prev")).cast("int")).alias("changed")
+        return stepped, [changed], lambda out, row: (
+            out.select("member", "comp") if row["changed"] else None
+        )
+
+    return fixpoint(step, labels, stats)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -130,7 +113,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def connected_components_alternating(
-    edges: DataFrame, max_iter: int = 25, stats: dict | None = None
+    edges: DataFrame, stats: dict | None = None
 ) -> DataFrame:
     """(src, dst) undirected edges → (member, comp): alternating
     large-star/small-star — O(log n) rounds regardless of chain length,
@@ -140,45 +123,25 @@ def connected_components_alternating(
     Convergence: the edge multiset is monotonically contracting toward
     the star forest, so equal (count, order-insensitive hash) between
     rounds certifies the fixpoint without an edge⋈edge comparison join.
+    Round 1 always continues: its max→min output can equal the
+    symmetrized input only when both are empty.
     """
-    und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _symmetrized(edges).filter(F.col("src") != F.col("dst")).distinct()
+    sig = [F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h")]
 
-    def _sig(df: DataFrame):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
+    def step(state):
+        cur, prev = state
+        return _small_star(_large_star(cur)), sig, lambda out, row: (
+            (out, tuple(row)) if tuple(row) != prev else None
+        )
 
-    cur = und
-    sig = _sig(cur)
-    iters = 0
-    for i in range(max_iter):
-        iters = i + 1
-        stepped = _small_star(_large_star(cur))
-        # lazy: the signature aggregate materializes the checkpoint —
-        # one driver action per round
-        stepped = stepped.localCheckpoint(eager=False)
-        nsig = _sig(stepped)
-        cur = stepped
-        if nsig == sig:
-            break
-        sig = nsig
+    cur = fixpoint(step, (cut(und), None), stats)[0]
     # fixpoint is a star forest: every edge (v, root) with root = comp min
     members = cur.select(F.col("src").alias("member"), F.col("dst").alias("comp"))
     roots = cur.select(F.col("dst").alias("member")).distinct().withColumn(
         "comp", F.col("member")
     )
-    out = members.unionByName(roots).distinct()
-    if stats is not None:
-        stats["iterations"] = iters
-    return out
+    return members.unionByName(roots).distinct()
 
 
 BROADCAST_MAP_MAX_ROWS = 5_000_000  # ~a few hundred MB of canonical ids

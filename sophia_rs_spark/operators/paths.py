@@ -9,9 +9,9 @@ Mapping from sophia's path evaluator (`sparql/src/exec.rs:338-482`,
 - Alternative      → union
 - ZeroOrOne (p?)   → zero-pairs ∪ one step
 - ZeroOrMore (p*) / OneOrMore (p+) → distributed BFS: frontier join with
-  visited-set anti-join, loop until the frontier is empty — the
-  DataFrame fixpoint replacing sophia's single-threaded
-  ``PathOrMore`` iterator (checkpointed per iteration to cut lineage)
+  visited-set anti-join until the frontier is empty — a step on the
+  shared fixpoint driver (:mod:`.fixpoint`) replacing sophia's
+  single-threaded ``PathOrMore`` iterator
 - NegatedPropertySet → predicate NOT IN
 
 Every function takes and returns a *pair relation* DataFrame with
@@ -25,6 +25,8 @@ from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import cut, fixpoint
 
 
 def pred(triples: DataFrame, predicate: str) -> DataFrame:
@@ -78,34 +80,30 @@ def zero_or_one(pairs: DataFrame, triples: DataFrame) -> DataFrame:
     return zero.unionByName(pairs).distinct()
 
 
-def one_or_more(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
+def one_or_more(pairs: DataFrame) -> DataFrame:
     """`path+`: BFS frontier expansion with visited anti-join
-    (`path_or_more.rs:21-123` as a distributed fixpoint)."""
-    base = pairs.distinct().localCheckpoint(eager=True)
-    reached = base
-    frontier = base
-    for _ in range(max_iter):
-        step = (
+    (`path_or_more.rs:21-123` as a distributed fixpoint).  ``reached``
+    stays a union of cut deltas, never re-materialized (lineage depth =
+    one union per round)."""
+    base = cut(pairs.distinct())
+
+    def step(state):
+        reached, frontier = state
+        new = (
             frontier.alias("f")
             .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
             .select(F.col("f.src").alias("src"), F.col("b.dst").alias("dst"))
             .distinct()
+            .join(reached, ["src", "dst"], "left_anti")
         )
-        # lazy checkpoint materialized by the count job (count scans all
-        # partitions, so every checkpoint block lands) — ONE driver
-        # action per BFS round; `reached` stays a union of checkpointed
-        # deltas, never re-materialized (lineage depth = one union/round)
-        new = step.join(reached, ["src", "dst"], "left_anti").localCheckpoint(
-            eager=False
+        return new, [F.count(F.lit(1)).alias("n")], lambda out, row: (
+            (reached.unionByName(out), out) if row["n"] else None
         )
-        if new.count() == 0:
-            break
-        reached = reached.unionByName(new)
-        frontier = new
-    return reached
+
+    return fixpoint(step, (base, base))[0]
 
 
-def zero_or_more(pairs: DataFrame, triples: DataFrame, max_iter: int = 40) -> DataFrame:
+def zero_or_more(pairs: DataFrame, triples: DataFrame) -> DataFrame:
     """`path*` (exec.rs:383-410): zero-length pairs from every node ∪ path+."""
     zero = _nodes(triples).select(F.col("n").alias("src"), F.col("n").alias("dst"))
-    return zero.unionByName(one_or_more(pairs, max_iter)).distinct()
+    return zero.unionByName(one_or_more(pairs)).distinct()

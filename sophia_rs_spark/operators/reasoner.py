@@ -4,10 +4,11 @@ Re-expresses sophia's ``reasoner`` crate rulesets (Simple/RDF/RDFS,
 `reasoner/src/ruleset/_rdfs.rs:32-99`): the same rule battery — rdfs2
 (domain), rdfs3 (range), rdfs5/rdfs11 (subPropertyOf/subClassOf
 transitive closure), rdfs7 (property inheritance), rdfs9 (class
-inheritance) — each rule a distributed join; saturation is a driver-side
-loop-until-no-new-rows (sophia's ``while changed`` at `_rdfs.rs:57-97`),
-with the small schema tables (subClassOf/subPropertyOf/domain/range)
-broadcast so instance-side rules never shuffle the big triple table.
+inheritance) — each rule a distributed join; saturation runs on the
+shared fixpoint driver (:mod:`.fixpoint`) until a round derives no new
+row (sophia's ``while changed`` at `_rdfs.rs:57-97`), with the small
+schema tables (subClassOf/subPropertyOf/domain/range) broadcast so
+instance-side rules never shuffle the big triple table.
 
 Vocabulary-axiom preparation (``prepare_rdf_vocab``/``prepare_rdfs_
 vocab``) and container-membership rules are out of scope for round 1;
@@ -17,10 +18,13 @@ is complete.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..terms.model import RDF, RDFS
+from .fixpoint import cut, fixpoint
 
 T_TYPE = f"<{RDF}type>"
 T_SUBCLASS = f"<{RDFS}subClassOf>"
@@ -38,22 +42,25 @@ def _pairs(triples: DataFrame, pred: str) -> DataFrame:
     return triples.filter(F.col("p") == pred).select("s", "o")
 
 
-def transitive_closure(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+def transitive_closure(pairs: DataFrame) -> DataFrame:
     """Transitive closure of an (s, o) relation by iterated doubling:
     O(log(path length)) joins (vs sophia's one-step-per-iteration inner
-    loops, `_rdfs.rs:73-78,85-90`)."""
-    closure = pairs.distinct().localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nxt = (
-            closure.alias("a")
-            .join(closure.alias("b"), F.col("a.o") == F.col("b.s"))
+    loops, `_rdfs.rs:73-78,85-90`).  The closure is a union of disjoint
+    cut deltas; each round joins it with itself and keeps the new pairs."""
+
+    def step(closure):
+        a, b = closure.alias("a"), closure.alias("b")
+        new = (
+            a.join(b, F.col("a.o") == F.col("b.s"))
             .select(F.col("a.s").alias("s"), F.col("b.o").alias("o"))
+            .distinct()
+            .join(closure, ["s", "o"], "left_anti")
         )
-        new_closure = closure.unionByName(nxt).distinct().localCheckpoint(eager=True)
-        if new_closure.count() == closure.count():
-            return new_closure
-        closure = new_closure
-    return closure
+        return new, [F.count(F.lit(1)).alias("n")], lambda out, row: (
+            closure.unionByName(out) if row["n"] else None
+        )
+
+    return fixpoint(step, cut(pairs.distinct()))
 
 
 # Axiomatic triples of the RDF/RDFS vocabularies (rdf12-semantics §9;
@@ -155,11 +162,14 @@ _SCHEMA_PREDS = (T_SUBPROP, T_SUBCLASS, T_DOMAIN, T_RANGE)
 _SCHEMA_COLLECT_CAP = 2_000_000
 
 
+def _is_schema_row():
+    return F.col("p").isin(*_SCHEMA_PREDS) | (
+        (F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE)
+    )
+
+
 def _extract_schema_rows(df: DataFrame):
-    sel = df.filter(
-        F.col("p").isin(*_SCHEMA_PREDS)
-        | ((F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE))
-    ).select("s", "p", "o")
+    sel = df.filter(_is_schema_row()).select("s", "p", "o")
     rows = sel.limit(_SCHEMA_COLLECT_CAP + 1).collect()
     if len(rows) > _SCHEMA_COLLECT_CAP:
         raise ValueError(
@@ -195,14 +205,52 @@ def _rel_apply(spark, pairs: set, src: DataFrame, key: str) -> DataFrame:
     return src.join(F.broadcast(df), key).select(*src.columns, "v")
 
 
-def rdfs_saturate(
-    triples: DataFrame, max_iter: int = 15, with_axioms: bool = False
-) -> DataFrame:
+def _rule_pass(spark, sp, dom, rng, sc, data: DataFrame) -> list:
+    """The instance rules over ``data`` with the given schema relations,
+    composed: rdfs7 feeds rdfs2/3, whose type conclusions feed rdfs9 --
+    the whole common cascade lands in ONE delta round (the closed sp/sc
+    relations make each rule one-shot-complete)."""
+    parts = []
+    with_r7 = data
+    # rdfs7: (s p1 o) & (p1 subPropertyOf p2) -> (s p2 o)
+    if sp:
+        r7 = _rel_apply(spark, sp, data, "p").select(
+            "s", F.col("v").alias("p"), "o"
+        )
+        parts.append(r7)
+        with_r7 = data.unionByName(r7)
+    types = [data.filter(F.col("p") == T_TYPE).select("s", F.col("o").alias("C1"))]
+    # rdfs2: (s p o) & domain(p)=C -> (s rdf:type C)
+    # rdfs3: (s p o) & range(p)=C -> (o type C); literal objects excluded
+    for rel, subject in ((dom, "s"), (rng, "o")):
+        if rel:
+            t = _rel_apply(spark, rel, with_r7, "p")
+            if subject == "o":
+                t = t.filter(~F.col("o").startswith('"'))
+            t = t.select(
+                F.col(subject).alias("s"),
+                F.lit(T_TYPE).alias("p"),
+                F.col("v").alias("o"),
+            )
+            parts.append(t)
+            types.append(t.select("s", F.col("o").alias("C1")))
+    # rdfs9: (x type C1) & (C1 subClassOf C2) -> (x type C2) over the
+    # input's types AND the type triples just produced by rdfs2/3
+    if sc:
+        parts.append(
+            _rel_apply(spark, sc, reduce(DataFrame.unionByName, types), "C1").select(
+                "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
+            )
+        )
+    return parts
+
+
+def rdfs_saturate(triples: DataFrame, with_axioms: bool = False) -> DataFrame:
     """RDFS-saturate a triples DataFrame (s, p, o) → saturated triples.
 
     Semi-naive (delta-only) evaluation: the schema (subClassOf /
     subPropertyOf / domain / range, rdfs5/11/12/13) is closed driver-side
-    — it is vocabulary-sized — and broadcast; each iteration joins ONLY
+    — it is vocabulary-sized — and broadcast; each round joins ONLY
     the previous round's delta against the broadcast schema (rdfs2/3/7/9),
     anti-joins against the accumulated known partitions, and stops on an
     empty delta.  The full triple table is scanned exactly once (round 1)
@@ -220,72 +268,24 @@ def rdfs_saturate(
     if with_axioms:
         ax = spark.createDataFrame(_AXIOMS, "s string, p string, o string")
         base = base.unionByName(ax)
-    # distinct() hash-partitions on (s,p,o); localCheckpoint preserves it
-    base = base.distinct().localCheckpoint(eager=True)
+    # distinct() hash-partitions on (s,p,o); the cut preserves it
+    base = cut(base.distinct())
 
     schema = _Schema()
     schema.absorb(_extract_schema_rows(base))
     schema.close()
 
-    known = [base]  # mutually-disjoint distinct parts, all (s,p,o)-partitioned
-    frontier = base
     # schema entries already joined against ALL data (round 1 joins the
     # full base): when the schema grows later, ONLY the new entries are
     # re-applied to the accumulated data (rules-as-deltas semi-naive)
-    applied = {
-        "sp": set(schema.sp),
-        "dom": set(schema.dom),
-        "rng": set(schema.rng),
-        "sc": set(schema.sc),
-    }
-    schema_changed = False
-    for _round in range(max_iter):
-        # Composed rule pass: rdfs7 feeds rdfs2/3, whose type conclusions
-        # feed rdfs9 -- the whole common cascade lands in ONE delta round
-        # (the closed sp/sc relations make each rule one-shot-complete).
-        parts = []
-        r7 = None
-        # rdfs7: (s p1 o) & (p1 subPropertyOf p2) -> (s p2 o)
-        if schema.sp:
-            r7 = _rel_apply(spark, schema.sp, frontier, "p").select(
-                "s", F.col("v").alias("p"), "o"
-            )
-            parts.append(r7)
-        base2 = frontier if r7 is None else frontier.unionByName(r7)
-        type_parts = [
-            frontier.filter(F.col("p") == T_TYPE).select("s", F.col("o").alias("C1"))
-        ]
-        # rdfs2: (s p o) & domain(p)=C -> (s rdf:type C)
-        if schema.dom:
-            t = _rel_apply(spark, schema.dom, base2, "p").select(
-                "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
-            )
-            parts.append(t)
-            type_parts.append(t.select("s", F.col("o").alias("C1")))
-        # rdfs3: (s p o) & range(p)=C -> (o type C); literal objects excluded
-        if schema.rng:
-            t = (
-                _rel_apply(spark, schema.rng, base2, "p")
-                .filter(~F.col("o").startswith('"'))
-                .select(
-                    F.col("o").alias("s"),
-                    F.lit(T_TYPE).alias("p"),
-                    F.col("v").alias("o"),
-                )
-            )
-            parts.append(t)
-            type_parts.append(t.select("s", F.col("o").alias("C1")))
-        # rdfs9: (x type C1) & (C1 subClassOf C2) -> (x type C2) over the
-        # frontier types AND the type triples just produced by rdfs2/3
-        if schema.sc:
-            all_types = type_parts[0]
-            for tp in type_parts[1:]:
-                all_types = all_types.unionByName(tp)
-            parts.append(
-                _rel_apply(spark, schema.sc, all_types, "C1").select(
-                    "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
-                )
-            )
+    applied = {k: set(getattr(schema, k)) for k in ("sp", "dom", "rng", "sc")}
+
+    def step(state):
+        # known: mutually-disjoint distinct parts, all (s,p,o)-partitioned
+        known, frontier, schema_changed = state
+        parts = _rule_pass(
+            spark, schema.sp, schema.dom, schema.rng, schema.sc, frontier
+        )
         # container membership: rdf:_N used as a predicate -> typed CMP
         parts.append(
             frontier.filter(F.col("p").rlike(_CONTAINER_PRED_RE))
@@ -296,108 +296,56 @@ def rdfs_saturate(
         # schema DELTAS (entries added after round 1, e.g. rdfs12's
         # (rdf:_N ⊑ rdfs:member)) must see ALL accumulated triples once,
         # not just the frontier — join them against the known parts
-        d_sp = schema.sp - applied["sp"]
-        d_dom = schema.dom - applied["dom"]
-        d_rng = schema.rng - applied["rng"]
-        d_sc = schema.sc - applied["sc"]
-        if d_sp or d_dom or d_rng or d_sc:
-            all_known = known[0]
-            for k in known[1:]:
-                all_known = all_known.unionByName(k)
-            if d_sp:
-                parts.append(
-                    _rel_apply(spark, d_sp, all_known, "p").select(
-                        "s", F.col("v").alias("p"), "o"
-                    )
-                )
-            if d_dom:
-                parts.append(
-                    _rel_apply(spark, d_dom, all_known, "p").select(
-                        "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
-                    )
-                )
-            if d_rng:
-                parts.append(
-                    _rel_apply(spark, d_rng, all_known, "p")
-                    .filter(~F.col("o").startswith('"'))
-                    .select(
-                        F.col("o").alias("s"),
-                        F.lit(T_TYPE).alias("p"),
-                        F.col("v").alias("o"),
-                    )
-                )
-            if d_sc:
-                parts.append(
-                    _rel_apply(
-                        spark,
-                        d_sc,
-                        all_known.filter(F.col("p") == T_TYPE).select(
-                            "s", F.col("o").alias("C1")
-                        ),
-                        "C1",
-                    ).select("s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o"))
-                )
-            applied = {
-                "sp": set(schema.sp),
-                "dom": set(schema.dom),
-                "rng": set(schema.rng),
-                "sc": set(schema.sc),
-            }
+        deltas = [getattr(schema, k) - v for k, v in applied.items()]
+        if any(deltas):
+            parts += _rule_pass(spark, *deltas, reduce(DataFrame.unionByName, known))
+            for k in applied:
+                applied[k] = set(getattr(schema, k))
         # schema-closure triples (rdfs5/11/12/13 conclusions) are entailed;
         # emitted in round 1 and whenever the schema changed — the
         # anti-join below drops the already-known ones
-        if _round == 0 or schema_changed:
+        if schema_changed:
             ct = schema.closure_triples()
             if ct:
                 parts.append(
                     spark.createDataFrame(ct, "s string, p string, o string")
                 )
 
-        new = parts[0]
-        for part in parts[1:]:
-            new = new.unionByName(part)
-        new = new.distinct()
+        new = reduce(DataFrame.unionByName, parts).distinct()
         for k in known:
             # shuffle-hash: both sides are already hash-partitioned on
             # (s,p,o) from their distinct(), so the anti-join needs no
             # exchange and no sort
             new = new.join(k.hint("shuffle_hash"), ["s", "p", "o"], "left_anti")
-        # ONE driver action per round: the lazy localCheckpoint
-        # materializes inside the same job as the summary aggregate,
-        # which returns emptiness AND the (vocabulary-sized) new schema
-        # rows together — a fixpoint round costs a single scheduler
-        # barrier instead of three (checkpoint + isEmpty + collect),
-        # which is what driver latency amplifies on a busy cluster.
-        new = new.localCheckpoint(eager=False)
-        is_schema = F.col("p").isin(*_SCHEMA_PREDS) | (
-            (F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE)
-        )
-        summary = new.agg(
+        # The round's one action returns emptiness AND the (vocabulary-
+        # sized) new schema rows together — one scheduler barrier instead
+        # of three (checkpoint + isEmpty + collect).
+        summary = [
             F.count(F.lit(1)).alias("n"),
-            F.collect_list(F.when(is_schema, F.struct("s", "p", "o"))).alias(
+            F.collect_list(F.when(_is_schema_row(), F.struct("s", "p", "o"))).alias(
                 "schema_rows"
             ),
-        ).first()
-        if summary["n"] == 0:
-            break
-        known.append(new)
-        frontier = new
-        rows = [(r["s"], r["p"], r["o"]) for r in summary["schema_rows"]]
-        if len(rows) > _SCHEMA_COLLECT_CAP:
-            raise ValueError(
-                f"schema exceeds {_SCHEMA_COLLECT_CAP} triples — not a "
-                "vocabulary; driver-side schema closure disabled at this size"
-            )
-        # inferred triples may extend the schema (e.g. an inferred
-        # (p type CMP) enables rdfs12) — deltas are small, absorb is cheap
-        schema_changed = schema.absorb(rows)
-        if schema_changed:
-            schema.close()
+        ]
 
-    out = known[0]
-    for k in known[1:]:
-        out = out.unionByName(k)
-    return out
+        def advance(out, row):
+            if row["n"] == 0:
+                return None
+            rows = [(r["s"], r["p"], r["o"]) for r in row["schema_rows"]]
+            if len(rows) > _SCHEMA_COLLECT_CAP:
+                raise ValueError(
+                    f"schema exceeds {_SCHEMA_COLLECT_CAP} triples — not a "
+                    "vocabulary; driver-side schema closure disabled at this size"
+                )
+            # inferred triples may extend the schema (e.g. an inferred
+            # (p type CMP) enables rdfs12) — deltas are small, absorb is cheap
+            changed = schema.absorb(rows)
+            if changed:
+                schema.close()
+            return known + [out], out, changed
+
+        return new, summary, advance
+
+    return reduce(DataFrame.unionByName, fixpoint(step, ([base], base, True))[0])
 
 
 def _is_existential(enc: str) -> bool:

@@ -264,8 +264,11 @@ def cosine_near_duplicates(
     max_bucket: int = KNN_MAX_BUCKET,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs above a permille threshold, bucketed
-    by LSH (oversized buckets skipped); integer permille output
-    (float-free for oracles)."""
+    by LSH; integer permille output (float-free for oracles).
+
+    Buckets above ``max_bucket`` are skipped (skew guard).  NOT a silent
+    cap: :func:`oversized_lsh_buckets` with the same ``n_planes``,
+    ``id_col`` and ``max_bucket`` lists the skipped (bucket, n)."""
     e = with_norms(emb, id_col=id_col)
     b = lsh_buckets(emb, n_planes, id_col)
     eb = e.join(b, id_col).withColumn(

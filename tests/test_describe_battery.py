@@ -10,6 +10,14 @@ from sophia_rs_spark.sparql import query
 
 QPFX = "PREFIX : <x:> "
 
+# a 26-deep blank-node chain: DESCRIBE follows it to the end, with no
+# round cap cutting it short
+BNODE_CHAIN = " ".join(
+    [":a :p _:b1."]
+    + [f"_:b{i} :p _:b{i+1}." for i in range(1, 25)]
+    + ["_:b25 :p :z."]
+)
+
 CASES = [
     (":a :b :c. :c :d :e, :e2. :e :f :g. :g :h :a.",
      "DESCRIBE :z", "", "empty"),
@@ -21,6 +29,7 @@ CASES = [
      "DESCRIBE :g",
      ":a :b _:c. _:c :d _:e. _:e :f :g. :g :h _:i. _:i :j _:k. _:k :l :m.",
      "bnodes deep"),
+    (BNODE_CHAIN, "DESCRIBE :a", BNODE_CHAIN, "bnodes 26 deep"),
     (":a :b (:c :d _:e).   _:e :f :g.   :d :h (:i :j).   :j :k :l.",
      "DESCRIBE :d",
      ":a :b (:c :d _:e).   _:e :f :g.   :d :h (:i :j).", "lists"),

@@ -153,6 +153,14 @@ def test_ppath_plus_and_zero_or_one(ds):
     assert (TT1, TT1) in v2
 
 
+def test_ppath_plus_long_chain(spark):
+    """`p+` runs its BFS to the fixpoint: every one of the 46·45/2 pairs
+    of a 45-edge chain, with no round cap cutting the longest paths."""
+    chain = [(f"<x:n{i}>", "<x:p>", f"<x:n{i+1}>", None) for i in range(45)]
+    t = spark.createDataFrame(chain, "s string, p string, o string, g string")
+    assert query(t, "SELECT ?x ?y { ?x <x:p>+ ?y }").count() == 1035
+
+
 def test_ppath_negated_set(ds):
     got = query(ds, QPFX + "SELECT ?s ?o { :a1 !(:p|:r|:t|:d) ?o . BIND(:a1 AS ?s) }")
     vals = {r["o"] for r in got.collect()}
