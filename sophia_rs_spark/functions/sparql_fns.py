@@ -772,9 +772,10 @@ def bigsum_emit(avg: bool, limbs: Column, monsters: Column,
     significant digits (the BigDecimal division contract).  Inputs are
     NULL-masked by the caller so the common path transfers empty Arrow
     columns.  ``monsters`` is an array of ``struct(l, n)`` — the monster
-    lexical and its multiplicity (1 on the per-row path; the distinct
-    count under the two-level weighted aggregation).  Returns the result
-    lexical (integer style at rank 0 for SUM, decimal style otherwise);
+    lexical and its multiplicity n (the collapsed row count; n ≡ 1 when
+    not collapsed, and for each element of a DISTINCT set).  Returns
+    the result lexical (integer style at rank 0 for SUM, decimal style
+    otherwise);
     NULL = poison (a limb sum overflowed decimal(38), needing >10^20
     rows — reported as unbound)."""
     import pandas as pd

@@ -547,11 +547,6 @@ def _const_typed_view(term: str):
 
 _TYPED_NUM_FNS = ("ABS", "CEIL", "FLOOR", "ROUND")
 
-# kill switch for the two-level weighted aggregation (see _select_df);
-# tests flip it to differential-check the weighted plane against the
-# per-row plane
-_TWO_LEVEL_AGG = True
-
 
 def _typed_expr(e: A.Expr, df: DataFrame, binder: Optional[_TmpBinder] = None):
     """Compile a numeric expression to (rank, dec, dbl) — arith/neg and
@@ -2496,26 +2491,26 @@ def _select_df(ctx: _Ctx, q: A.Query):
             df = b.df.withColumn(cn, argval)
             argcol[i] = cn
 
-        # r6: two-level WEIGHTED aggregation (guide §2.3 "aggregate
-        # before you shuffle").  When every aggregate is a plain
-        # (non-DISTINCT) COUNT/SUM/AVG/MIN/MAX/SAMPLE, first collapse
-        # the rows to DISTINCT (group keys, argument values) with a
-        # multiplicity count — a cheap codegen hash aggregate with
-        # map-side partials — and run the per-value typed-numeric
-        # decomposition towers plus the final aggregate over the
+        # WEIGHTED aggregation, the one aggregation plane: every row is
+        # a (value, multiplicity wn) pair, and COUNT/SUM/AVG reduce
+        # Σ wn and Σ value×wn; n ≡ 1 when not collapsed.  When every
+        # aggregate is a plain (non-DISTINCT) COUNT/SUM/AVG/MIN/MAX/
+        # SAMPLE, the rows first collapse to DISTINCT (group keys,
+        # argument values) with their multiplicity ("aggregate before
+        # you shuffle") — a cheap codegen hash aggregate with map-side
+        # partials — so the typed-numeric
+        # decomposition towers and the final aggregate run over the
         # distinct values only (13.9M → a few hundred tower rows on
-        # the headline bench).  Exactness is unchanged: SUM becomes
-        # Σ value×n with the products exact by construction (limb and
-        # fast-plane magnitudes < 10^18, multiplicities < 10^19 ⇒
-        # products < 10^37 < decimal(38)), and the weighted sums have
-        # the SAME TOTAL as the per-row sums, so decimal-overflow
-        # poisoning engages in exactly the same cases.  GROUP_CONCAT
-        # (element multiplicity in the output) and DISTINCT aggregates
-        # fall back to the per-row path.
-        wn = None
+        # the headline bench).  Exactness is unchanged: the products
+        # are exact by construction (limb and fast-plane magnitudes
+        # < 10^18, multiplicities < 10^19 ⇒ products < 10^37 <
+        # decimal(38)), and the weighted sums have the SAME TOTAL as
+        # uncollapsed ones, so decimal-overflow poisoning engages in
+        # exactly the same cases.  GROUP_CONCAT (element multiplicity
+        # in the output) and DISTINCT aggregates are not collapsed.
+        wn = F.lit(1)
         if (
-            _TWO_LEVEL_AGG
-            and q.aggregates
+            q.aggregates
             and all(
                 a.fn in ("count", "sum", "avg", "min", "max", "sample")
                 and not a.distinct
@@ -2531,7 +2526,7 @@ def _select_df(ctx: _Ctx, q: A.Query):
                 continue
             cn = argcol[i]
             if a.fn in ("sum", "avg"):
-                # shared per-row decomposition, each piece materialized
+                # shared per-value decomposition, each piece materialized
                 # ONCE as an _opaque-pinned column: plain deterministic
                 # withColumns would be CollapseProject-inlined back into
                 # every consumer (rank re-expanded inside the limb gate,
@@ -2603,22 +2598,20 @@ def _select_df(ctx: _Ctx, q: A.Query):
                 df = df.drop(cn + "nv", cn + "lx", cn + "ip", cn + "fr")
         aggs = []
         post_emit: List = []  # (alias, raw-struct → term renderer)
+
+        def _count_of(present):
+            # Σ wn over the rows where ``present`` holds
+            return F.coalesce(
+                F.sum(F.when(present, wn)), F.lit(0)
+            ).cast("long")
+
         for i, a in enumerate(q.aggregates):
             if a.fn == "count" and a.arg is None:
                 if a.distinct:  # COUNT(DISTINCT *) = distinct solutions
-                    aggs.append(
-                        FN.int_term(F.count_distinct(*solution_cols)).alias(
-                            a.alias
-                        )
-                    )
-                elif wn is not None:
-                    aggs.append(
-                        FN.int_term(
-                            F.coalesce(F.sum(wn), F.lit(0)).cast("long")
-                        ).alias(a.alias)
-                    )
+                    cnt = F.count_distinct(*solution_cols)
                 else:
-                    aggs.append(FN.int_term(F.count(F.lit(1))).alias(a.alias))
+                    cnt = F.coalesce(F.sum(wn), F.lit(0)).cast("long")
+                aggs.append(FN.int_term(cnt).alias(a.alias))
                 continue
             c = F.col(argcol[i])
             # error-poisoning (aggregate_iter.rs:236-309 + test.rs:834-848
@@ -2634,12 +2627,8 @@ def _select_df(ctx: _Ctx, q: A.Query):
                 # COUNT yields an xsd:integer term (SparqlNumber::from)
                 if a.distinct:
                     cnt = F.count_distinct(c)
-                elif wn is not None:
-                    cnt = F.coalesce(
-                        F.sum(F.when(c.isNotNull(), wn)), F.lit(0)
-                    ).cast("long")
                 else:
-                    cnt = F.count(c)
+                    cnt = _count_of(c.isNotNull())
                 aggs.append(FN.int_term(cnt).alias(a.alias))
             elif a.fn in ("sum", "avg"):
                 # TYPED accumulation (value/_number.rs promotion):
@@ -2653,125 +2642,108 @@ def _select_df(ctx: _Ctx, q: A.Query):
                 # distributed, map-side partial aggregation — with a
                 # JVM recombination fast path and an Arrow-batched
                 # arbitrary-precision finalizer for overflowing groups.
+                # ONE decomposition (the tower columns above), two
+                # reducers: a weighted SQL sum, or a fold over the
+                # distinct set.
                 rin = F.col(argcol[i] + "r")
-                dblin = F.col(argcol[i] + "f")
                 poison = _poisoned_by(rin.isNull())
+                rank_out = F.max(rin)
+                dblin, fv, dg, sg, mcol = (
+                    F.col(argcol[i] + k) for k in ("f", "fv", "dg", "sg", "m")
+                )
                 zero_limb = F.lit(0).cast("decimal(38,0)")
                 if a.distinct:
                     # DISTINCT dedups on the TERM (aggregate_iter.rs
                     # seen: HashSet<ResultTerm> — "2.0"^^decimal and
                     # "2e0"^^double are distinct even though equal in
-                    # value); fold the set with per-element typed views
-                    terms = F.collect_set(c.cast("string"))
+                    # value): the set holds (term, pieces) structs, an
+                    # unbound argument stays out of it, and the fold
+                    # adds the same pieces the weighted sums reduce
+                    elems = F.collect_set(
+                        F.when(
+                            c.isNotNull(),
+                            F.struct(
+                                c.cast("string").alias("t"),
+                                fv.alias("fv"), dblin.alias("f"),
+                                dg.alias("dg"), sg.alias("sg"),
+                                mcol.alias("m"),
+                            ),
+                        )
+                    )
                     init = F.struct(
-                        F.lit(0).cast("int").alias("r"),
                         F.array(
                             *[zero_limb for _ in range(FN.SUM_LIMBS)]
                         ).alias("limbs"),
+                        zero_limb.alias("fs"),
                         F.lit(0.0).alias("dbl"),
                         F.array()
                         .cast("array<struct<l:string,n:bigint>>")
                         .alias("m"),
                     )
 
-                    def _merge(acc, x):
-                        xr, _xdec, xdbl, _xbig = _typed_view(x)
-                        xlex = F.when(
-                            x.startswith('"'), FN.lex_num(x)
-                        ).otherwise(x)
-                        dg, sg, mon = FN.sum_limb_parts(xlex, xr)
-                        newlimbs = F.array(*[
-                            F.try_add(
-                                acc["limbs"][j],
-                                F.coalesce(
-                                    FN.sum_limb(dg, sg, j), zero_limb
-                                ),
-                            )
-                            for j in range(FN.SUM_LIMBS)
-                        ])
+                    def _add(acc, x):
                         return F.struct(
-                            F.greatest(acc["r"], xr).cast("int").alias("r"),
-                            newlimbs.alias("limbs"),
-                            (acc["dbl"] + xdbl).alias("dbl"),
+                            F.array(*[
+                                F.try_add(
+                                    acc["limbs"][j],
+                                    F.coalesce(
+                                        FN.sum_limb(x["dg"], x["sg"], j),
+                                        zero_limb,
+                                    ),
+                                )
+                                for j in range(FN.SUM_LIMBS)
+                            ]).alias("limbs"),
+                            F.try_add(
+                                acc["fs"], F.coalesce(x["fv"], zero_limb)
+                            ).alias("fs"),
+                            (acc["dbl"] + F.coalesce(x["f"], F.lit(0.0)))
+                            .alias("dbl"),
                             F.when(
-                                mon.isNotNull(),
+                                x["m"].isNotNull(),
                                 F.array_append(
                                     acc["m"],
                                     F.struct(
-                                        mon.alias("l"),
+                                        x["m"].alias("l"),
                                         F.lit(1).cast("long").alias("n"),
                                     ),
                                 ),
                             ).otherwise(acc["m"]).alias("m"),
                         )
 
-                    folded = F.aggregate(terms, init, _merge)
-                    rank_out = folded["r"]
-                    limb_sums, monsters = folded["limbs"], folded["m"]
-                    sdbl = folded["dbl"]
-                    n = F.size(terms)
-                    fast_sum = F.lit(None).cast("decimal(38,0)")
+                    folded = F.aggregate(elems, init, _add)
+                    limb_sums, fast_sum = folded["limbs"], folded["fs"]
+                    sdbl, monsters = folded["dbl"], folded["m"]
+                    n = F.size(elems)
                 else:
-                    rank_out = F.max(rin)
-                    dg = F.col(argcol[i] + "dg")
-                    sg = F.col(argcol[i] + "sg")
-                    mcol = F.col(argcol[i] + "m")
-                    if wn is not None:
-                        # weighted (two-level) plane: value × multiplicity.
-                        # Products are exact (magnitudes < 10^18,
-                        # multiplicity < 10^19 ⇒ < 10^37 < decimal(38));
-                        # the weighted sums equal the per-row sums in
-                        # VALUE, so overflow→NULL→poison engages
-                        # identically.
-                        wnd = wn.cast("decimal(19,0)")
-                        limb_sums = F.array(*[
-                            F.coalesce(
-                                F.sum(
-                                    F.try_multiply(
-                                        FN.sum_limb(dg, sg, j), wnd
-                                    )
-                                ),
-                                zero_limb,
-                            )
-                            for j in range(FN.SUM_LIMBS)
-                        ])
-                        monsters = F.collect_list(
-                            F.when(
-                                mcol.isNotNull(),
-                                F.struct(
-                                    mcol.alias("l"),
-                                    wn.cast("long").alias("n"),
-                                ),
-                            )
+                    # value × multiplicity.  Products are exact
+                    # (magnitudes < 10^18, multiplicity < 10^19 ⇒
+                    # < 10^37 < decimal(38)); the weighted sums equal
+                    # the uncollapsed sums in VALUE, so
+                    # overflow→NULL→poison engages identically.
+                    wnd = wn.cast("decimal(19,0)")
+                    limb_sums = F.array(*[
+                        F.coalesce(
+                            F.sum(
+                                F.try_multiply(FN.sum_limb(dg, sg, j), wnd)
+                            ),
+                            zero_limb,
                         )
-                        fast_sum = F.sum(
-                            F.try_multiply(F.col(argcol[i] + "fv"), wnd)
+                        for j in range(FN.SUM_LIMBS)
+                    ])
+                    monsters = F.collect_list(
+                        F.when(
+                            mcol.isNotNull(),
+                            F.struct(
+                                mcol.alias("l"),
+                                wn.cast("long").alias("n"),
+                            ),
                         )
-                        sdbl = F.sum(dblin * wn)
-                        n = F.coalesce(
-                            F.sum(F.when(c.isNotNull(), wn)), F.lit(0)
-                        ).cast("long")
-                    else:
-                        limb_sums = F.array(*[
-                            F.coalesce(
-                                F.sum(FN.sum_limb(dg, sg, j)), zero_limb
-                            )
-                            for j in range(FN.SUM_LIMBS)
-                        ])
-                        monsters = F.collect_list(
-                            F.when(
-                                mcol.isNotNull(),
-                                F.struct(
-                                    mcol.alias("l"),
-                                    F.lit(1).cast("long").alias("n"),
-                                ),
-                            )
-                        )
-                        # single-limb fast plane: plain decimal SUM with
-                        # map-side partials (NULL when no fast rows)
-                        fast_sum = F.sum(F.col(argcol[i] + "fv"))
-                        sdbl = F.sum(dblin)
-                        n = F.count(c)
+                    )
+                    # single-limb fast plane: plain decimal SUM with
+                    # map-side partials (NULL when no fast rows)
+                    fast_sum = F.sum(F.try_multiply(fv, wnd))
+                    sdbl = F.sum(dblin * wn)
+                    n = _count_of(c.isNotNull())
                 # two-phase: aggregate the RAW typed state (a small
                 # struct), render the lexical AFTER the groupBy in a
                 # projection over plain struct-field references — the
@@ -3045,12 +3017,30 @@ def _select_df(ctx: _Ctx, q: A.Query):
 # results are cached: each call returns the plan wrapped in a fresh
 # ``where(TRUE)`` (optimized away), so the returned frame carries fresh
 # RDD lineage and every action recomputes from the sources — Spark
-# cannot skip shuffle stages of a previous run.  ASK (whose result is a
-# bool, i.e. an eagerly computed value) and NOW()-pinning queries are
-# never cached.  Keyed weakly on the triples DataFrame object so plans
-# die with their dataset.
+# cannot skip shuffle stages of a previous run.  Plans that embed a
+# value computed at build time are never cached: ASK (a bool), SERVICE
+# (the remote results) and NOW() (the pinned instant), the last two
+# found in the parsed query.  Keyed weakly on the triples DataFrame
+# object so plans die with their dataset.
 _PREPARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _PREPARED_CAP = 32
+
+
+def _reads_outside(node) -> bool:
+    """Does the parsed query (any sub-node) call SERVICE or NOW()?"""
+    if isinstance(node, A.ServiceClause):
+        return True
+    if isinstance(node, A.Expr) and node.op == "call":
+        if node.args[0] == "NOW":
+            return True
+    if dataclasses.is_dataclass(node):
+        return any(
+            _reads_outside(getattr(node, f.name))
+            for f in dataclasses.fields(node)
+        )
+    if isinstance(node, (list, tuple)):
+        return any(_reads_outside(x) for x in node)
+    return False
 
 
 def query(triples: DataFrame, text: str, base: Optional[str] = None):
@@ -3058,8 +3048,6 @@ def query(triples: DataFrame, text: str, base: Optional[str] = None):
     (`sparql/src/wrapper.rs:20-85`).  Repeated identical query text
     against the same dataset frame reuses the compiled plan (see
     ``_PREPARED`` above); execution always recomputes."""
-    if re.search(r"\bNOW\s*\(", text, re.IGNORECASE):
-        return evaluate(triples, A.parse_query(text, base))
     try:
         per = _PREPARED.get(triples)
         if per is None:
@@ -3069,9 +3057,11 @@ def query(triples: DataFrame, text: str, base: Optional[str] = None):
     key = (text, base)
     df = per.get(key)
     if df is None:
-        df = evaluate(triples, A.parse_query(text, base))
-        if not isinstance(df, DataFrame):
-            return df  # ASK bool — a computed result, never cached
+        parsed = A.parse_query(text, base)
+        volatile = _reads_outside(parsed)
+        df = evaluate(triples, parsed)
+        if volatile or not isinstance(df, DataFrame):
+            return df
         per[key] = df
         while len(per) > _PREPARED_CAP:
             per.popitem(last=False)

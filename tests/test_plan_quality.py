@@ -281,3 +281,39 @@ def test_exists_plans_stay_joins(spark):
             assert got.count() == expected, q
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
+def test_aggregate_collapse_decision_pinned(spark):
+    """The weighted pre-collapse runs only when every aggregate is a
+    plain COUNT/SUM/AVG/MIN/MAX/SAMPLE.  Counted in the optimized
+    logical plan: the headline shape has the pre-collapse plus the final
+    Aggregate; two COUNT(DISTINCT)s are Spark's own two-Aggregate
+    distinct rewrite; GROUP_CONCAT has the final one only.  Widening
+    the collapse changes these counts — then revisit
+    tests/test_two_level_agg.py, whose equivalence check relies on
+    COUNT(DISTINCT) staying uncollapsed."""
+    import re
+
+    from sophia_rs_spark.sparql import query
+
+    xi = '"%d"^^<http://www.w3.org/2001/XMLSchema#integer>'
+    df = spark.createDataFrame(
+        [(f"<x:o{i}>", p, o)
+         for i in range(4)
+         for p, o in (("<x:q>", xi % i), ("<x:rf>", '"A"'), ("<x:ls>", '"O"'))],
+        "s string, p string, o string",
+    )
+    where = "WHERE { ?o <x:q> ?q ; <x:rf> ?rf ; <x:ls> ?ls }"
+    shapes = {
+        "sum_count": f"SELECT ?rf (COUNT(?q) AS ?n) (SUM(?q) AS ?t) {where} "
+                     "GROUP BY ?rf",
+        "count_distinct": "SELECT (COUNT(DISTINCT ?ls) AS ?n) "
+                          f"(COUNT(DISTINCT ?o) AS ?no) {where}",
+        "group_concat": 'SELECT ?rf (GROUP_CONCAT(?ls; separator="|") '
+                        f"AS ?c) {where} GROUP BY ?rf",
+    }
+    got = {}
+    for name, text in shapes.items():
+        plan = query(df, text)._jdf.queryExecution().optimizedPlan()
+        got[name] = len(re.findall(r"\bAggregate \[", plan.toString()))
+    assert got == {"sum_count": 2, "count_distinct": 2, "group_concat": 1}

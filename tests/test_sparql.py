@@ -5,6 +5,7 @@ expected bindings as canonical term strings)."""
 import pytest
 from pyspark.sql import functions as F
 
+import sophia_rs_spark.sparql.eval as E
 from sophia_rs_spark.sparql import query
 from sophia_rs_spark.terms.model import XSD
 
@@ -1226,3 +1227,34 @@ class TestIfErrorPropagation:
         vals = dict(rows_of(got))
         assert vals["<http://example.org/ns/bob>"].startswith('"1"')
         assert vals["<http://example.org/ns/alice>"].startswith('"2"')
+
+
+def test_plan_cache_hit_recomputes(spark):
+    """A repeated query reuses the compiled plan, never its results:
+    both runs read the whole source."""
+    xi = '"%d"^^<http://www.w3.org/2001/XMLSchema#integer>'
+    src = spark.createDataFrame(
+        [(f"<x:s{i}>", "<x:v>", xi % i) for i in range(10)],
+        "s string, p string, o string",
+    )
+    reads = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for batch in batches:
+            reads.add(len(batch))
+            yield batch
+
+    triples = src.mapInPandas(count, schema=src.schema)
+    text = "SELECT (SUM(?v) AS ?t) (COUNT(*) AS ?n) { ?s <x:v> ?v }"
+    runs = [query(triples, text).collect() for _ in range(2)]
+    assert (text, None) in E._PREPARED[triples]  # the second run was a hit
+    assert runs[0] == runs[1]
+    assert runs[0][0]["t"] == xi % 45
+    assert reads.value == 2 * 10
+
+
+def test_now_is_not_frozen_by_the_plan_cache(spark, data):
+    text = "SELECT (NOW() AS ?t) {}"
+    first = query(data, text).collect()[0]["t"]
+    second = query(data, text).collect()[0]["t"]
+    assert first != second

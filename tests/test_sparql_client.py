@@ -339,6 +339,38 @@ class TestServiceClause:
             ("<x:s2>", '"Remote Two"@en', None),
         ]
 
+    def test_repeated_query_sees_new_remote_bindings(self, spark, local):
+        # the plan cache must not freeze the remote results: the same
+        # text on the same frame asks the endpoint again
+        from sophia_rs_spark.sparql import set_service_transport
+
+        label = ['"Before"']
+
+        def transport(url, headers, body):
+            remote = spark.createDataFrame(
+                [("<x:o1>", "<x:label>", label[0])],
+                "s string, p string, o string",
+            )
+            res = sparql_query(remote, body.decode())
+            return (
+                "application/sparql-results+json",
+                to_json_str(bindings_to_json(res)).encode(),
+            )
+
+        text = (
+            "SELECT ?s ?lbl { ?s <x:p> ?o"
+            "  SERVICE <http://ep/s> { ?o <x:label> ?lbl } }"
+        )
+        set_service_transport(transport)
+        try:
+            first = [tuple(r) for r in sparql_query(local, text).collect()]
+            label[0] = '"After"'
+            second = [tuple(r) for r in sparql_query(local, text).collect()]
+        finally:
+            set_service_transport(None)
+        assert first == [("<x:s1>", '"Before"')]
+        assert second == [("<x:s1>", '"After"')]
+
     def test_failure_is_an_error(self, spark, local):
         from sophia_rs_spark.sparql import SparqlError, set_service_transport
 
