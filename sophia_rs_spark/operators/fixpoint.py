@@ -12,13 +12,13 @@ the three decisions they share:
   the cut frame.  It materializes the cut (an aggregate scans every
   partition, so every checkpoint block lands) and returns what the step
   needs to decide whether anything changed; a step may add columns to
-  it (the rdfs schema rows, the alternating-CC signature).  One action
+  it (the rdfs schema rows, the components signature).  One action
   per round rather than checkpoint + probe matters because each action
   is a driver barrier, and barrier latency grows on a busy cluster.
 - **Termination.** Loop until the step reports no change.  Every step
-  is monotone over a finite domain (labels only decrease, reached sets
-  only grow), so there is no round cap and a partial fixpoint is never
-  returned.
+  is monotone over a finite domain (component edges only contract,
+  reached sets only grow), so there is no round cap and a partial
+  fixpoint is never returned.
 
 Executor loss: a local checkpoint keeps its blocks only in executor
 storage and drops the lineage behind them, so losing an executor fails

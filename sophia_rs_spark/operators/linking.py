@@ -5,12 +5,11 @@ rule: owl:sameAs bridges between IRIs form undirected components; every
 member is rewritten to the component's canonical id (the minimum member
 in canonical-string order — deterministic, cluster-size-independent).
 
-Algorithm: iterative min-label propagation over the symmetrized edge
-list, one DataFrame join step per round on the shared driver in
-:mod:`.fixpoint` (lineage cuts, one action per round, no round cap).
-Rounds = O(longest chain); sameAs chains in web data are short, and
-:func:`connected_components_alternating` covers the long-chain case in
-O(log n) rounds.
+Algorithm: alternating large-star/small-star contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond"), one round per
+step on the shared driver in :mod:`.fixpoint` (lineage cuts, one action
+per round, no round cap).  Rounds are O(log n) whatever the chain
+length, so one adversarial sameAs chain cannot make linking linear.
 """
 
 from __future__ import annotations
@@ -36,56 +35,12 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
-    """(src, dst) undirected edges → (member, comp) with comp = min member
-    of the component (canonical-string order).
-
-    Min-label propagation, O(diameter) rounds — the default because
-    owl:sameAs chains in web data are short.  For long-chain/skewed
-    graphs use :func:`connected_components_alternating` (O(log n)).
-    Deterministic for any partitioning: min is order-insensitive.
-
-    Convergence probe is free: the old label rides along in the same
-    row as the new one, so "did anything change" is a sum over the
-    round's cut frame — no extra labels⋈labels join per round.
-    """
-    # both cuts land inside round 1's job; labels read the cut und, so
-    # the edges upstream run once
-    und = cut(_symmetrized(edges).distinct())
-    members = und.select(F.col("src").alias("member")).distinct()
-    labels = cut(members.withColumn("comp", F.col("member")))
-
-    def step(labels):
-        # neighbor minimum: for each vertex, min comp among its neighbors
-        nbr_min = (
-            und.join(labels, und["dst"] == labels["member"], "inner")
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        stepped = labels.join(
-            nbr_min, labels["member"] == nbr_min["src"], "left_outer"
-        ).select(
-            "member",
-            F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
-            F.col("comp").alias("_prev"),
-        )
-        changed = F.sum((F.col("comp") != F.col("_prev")).cast("int")).alias("changed")
-        return stepped, [changed], lambda out, row: (
-            out.select("member", "comp") if row["changed"] else None
-        )
-
-    return fixpoint(step, labels, stats)
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", Alg. 2): symmetrize, group by node u with
-    neighborhood Γ(u), m = min(Γ(u) ∪ {u}); link every strictly-larger
-    neighbor to m.  String comparison = canonical-term order."""
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    grouped = sym.groupBy("src").agg(F.collect_set("dst").alias("nbrs"))
+    """Large-star round (Kiveris et al., Alg. 2): symmetrize, group by
+    node u with neighborhood Γ(u), m = min(Γ(u) ∪ {u}); link every
+    strictly-larger neighbor to m.  String comparison = canonical-term
+    order."""
+    grouped = _symmetrized(edges).groupBy("src").agg(F.collect_set("dst").alias("nbrs"))
     m = F.array_min(F.array_append(F.col("nbrs"), F.col("src")))
     targets = F.filter(F.col("nbrs"), lambda v: v > F.col("src"))
     return (
@@ -112,21 +67,27 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_alternating(
-    edges: DataFrame, stats: dict | None = None
-) -> DataFrame:
-    """(src, dst) undirected edges → (member, comp): alternating
-    large-star/small-star — O(log n) rounds regardless of chain length,
-    the scale path for long-chain or adversarial sameAs graphs (opt-in;
-    min-label is the default for short web chains).
+def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+    """(src, dst) undirected edges → (member, comp) with comp = min member
+    of the component (canonical-string order), one row per vertex.
 
-    Convergence: the edge multiset is monotonically contracting toward
-    the star forest, so equal (count, order-insensitive hash) between
-    rounds certifies the fixpoint without an edge⋈edge comparison join.
-    Round 1 always continues: its max→min output can equal the
-    symmetrized input only when both are empty.
+    Every vertex of the input is a member, including one whose only edge
+    is a self-loop: ``(x, x)`` alone yields the row ``(x, x)``.  Self-loops
+    join no two vertices, so the contraction runs without them.
+    Deterministic for any partitioning: min is order-insensitive.
+
+    Convergence: the edge set contracts monotonically toward the star
+    forest (every non-root linked to its root), so equal (count,
+    order-insensitive hash) between rounds certifies the fixpoint
+    without an edge⋈edge comparison join.  Round 1 always continues.
+
+    The result is cut: callers read it more than once (canonicalize's
+    size probe and its two joins), and each read would otherwise replay
+    the vertex distinct and the forest join.
     """
-    und = _symmetrized(edges).filter(F.col("src") != F.col("dst")).distinct()
+    # the cut und lands inside round 1's job, so the edges upstream run
+    # once for both the contraction and the vertex set
+    und = cut(_symmetrized(edges).distinct())
     sig = [F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h")]
 
     def step(state):
@@ -135,37 +96,31 @@ def connected_components_alternating(
             (out, tuple(row)) if tuple(row) != prev else None
         )
 
-    cur = fixpoint(step, (cut(und), None), stats)[0]
-    # fixpoint is a star forest: every edge (v, root) with root = comp min
-    members = cur.select(F.col("src").alias("member"), F.col("dst").alias("comp"))
-    roots = cur.select(F.col("dst").alias("member")).distinct().withColumn(
-        "comp", F.col("member")
+    forest = fixpoint(step, (und.filter(F.col("src") != F.col("dst")), None), stats)[0]
+    vertices = und.select(F.col("src").alias("member")).distinct()
+    # roots have no forest edge: they are their own component id
+    return cut(
+        vertices.join(forest.withColumnRenamed("src", "member"), "member", "left_outer")
+        .select("member", F.coalesce("dst", "member").alias("comp"))
     )
-    return members.unionByName(roots).distinct()
 
 
 BROADCAST_MAP_MAX_ROWS = 5_000_000  # ~a few hundred MB of canonical ids
 
 
-def canonicalize_entities(
-    triples: DataFrame,
-    components: DataFrame,
-    rewrite_g: bool = False,
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """Rewrite s/o (and optionally g) through the canonical-id map.
+def canonicalize_entities(triples: DataFrame, components: DataFrame) -> DataFrame:
+    """Rewrite s and o through the canonical-id map; other columns pass
+    through unchanged.
 
     The component map is usually small relative to the triple table
     (only linked entities appear) → broadcast joins, no shuffle of the
     triple table.  A 100 TB corpus's sameAs map can exceed executor
-    memory, so ``broadcast=None`` (auto) measures the map: at most
+    memory, so the map is measured first: at most
     ``BROADCAST_MAP_MAX_ROWS`` rows → broadcast hint, else a plain join
     (AQE still upgrades it at runtime if the map turns out small)."""
-    if broadcast is None:
-        probe = components.limit(BROADCAST_MAP_MAX_ROWS + 1).count()
-        broadcast = probe <= BROADCAST_MAP_MAX_ROWS
-    comp = F.broadcast(components) if broadcast else components
-    out = (
+    probe = components.limit(BROADCAST_MAP_MAX_ROWS + 1).count()
+    comp = F.broadcast(components) if probe <= BROADCAST_MAP_MAX_ROWS else components
+    return (
         triples.join(
             comp.withColumnRenamed("member", "s").withColumnRenamed("comp", "_cs"),
             "s",
@@ -183,4 +138,3 @@ def canonicalize_entities(
             *[c for c in triples.columns if c not in ("s", "p", "o")],
         )
     )
-    return out

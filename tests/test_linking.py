@@ -1,17 +1,14 @@
-"""Connected-components / canonicalization tests: min-label vs the
-alternating large-star/small-star scale path, and the broadcast-fallback
-regimes of canonicalize_entities."""
+"""Connected-components / canonicalization tests: large-star/small-star
+components against a union-find reference, their round bounds, and the
+broadcast-fallback regimes of canonicalize_entities."""
+
+import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from sophia_rs_spark.operators import describe, linking, paths, reasoner
 from sophia_rs_spark.operators.fixpoint import fixpoint
-from sophia_rs_spark.operators.linking import (
-    canonicalize_entities,
-    connected_components,
-    connected_components_alternating,
-)
+from sophia_rs_spark.operators.linking import canonicalize_entities, connected_components
 
 
 def _edges(spark, pairs):
@@ -19,57 +16,104 @@ def _edges(spark, pairs):
 
 
 def _as_map(df):
-    return {r["member"]: r["comp"] for r in df.collect()}
+    rows = df.collect()
+    out = {r["member"]: r["comp"] for r in rows}
+    assert len(out) == len(rows), "a member appears in more than one row"
+    return out
+
+
+def _union_find(pairs):
+    """Reference components: every vertex of ``pairs`` → min member."""
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # root = min member
+    return {v: find(v) for v in parent}
+
+
+def _chain_forest(seed):
+    """Short chains (2–5 nodes) over shuffled names, random orientation,
+    so the component minimum sits anywhere along its chain."""
+    rng = random.Random(seed)
+    names = [f"<v{i:03d}>" for i in range(120)]
+    rng.shuffle(names)
+    pairs = []
+    while len(names) >= 2:
+        chain, names = names[: (k := rng.randint(2, 5))], names[k:]
+        for a, b in zip(chain, chain[1:]):
+            pairs.append((a, b) if rng.random() < 0.5 else (b, a))
+    rng.shuffle(pairs)
+    return pairs
+
+
+def _duplicated_reversed(seed):
+    rng = random.Random(seed)
+    base = [(f"<d{i}>", f"<d{i + 1}>") for i in range(0, 12, 2)] + [("<d1>", "<d4>")]
+    pairs = base + [(b, a) for a, b in base] + rng.sample(base, 4)
+    rng.shuffle(pairs)
+    return pairs
+
+
+UNION_FIND_CASES = {
+    "small graph": [
+        ("<b>", "<a>"), ("<c>", "<b>"), ("<e>", "<d>"),
+        ("<f>", "<f2>"), ("<f2>", "<f3>"), ("<f3>", "<a>"),
+    ],
+    "chain forest seed 1": _chain_forest(1),
+    "chain forest seed 2": _chain_forest(2),
+    "star 50 leaves": [("<hub>", f"<s{i:02d}>") for i in range(50)],
+    "duplicate and reversed edges": _duplicated_reversed(3),
+    "self-loops": [("<x>", "<x>"), ("<y>", "<y>"), ("<y>", "<z>")],
+}
 
 
 class TestAlternatingCC:
-    def test_small_graph_same_as_minlabel(self, spark):
-        pairs = [
-            ("<b>", "<a>"), ("<c>", "<b>"), ("<e>", "<d>"),
-            ("<f>", "<f2>"), ("<f2>", "<f3>"), ("<f3>", "<a>"),
-        ]
-        e = _edges(spark, pairs)
-        assert _as_map(connected_components_alternating(e)) == _as_map(
-            connected_components(e)
-        )
+    @pytest.mark.parametrize("case", list(UNION_FIND_CASES))
+    def test_matches_union_find(self, spark, case):
+        pairs = UNION_FIND_CASES[case]
+        assert _as_map(connected_components(_edges(spark, pairs))) == _union_find(pairs)
 
     def test_long_chain_fewer_iterations(self, spark):
-        # 1k-node chain: min-label needs O(n) rounds, alternating O(log n)
+        # 1k-node chain: star contraction converges in O(log n) rounds
         n = 1000
         pairs = [(f"<n{i:04d}>", f"<n{i+1:04d}>") for i in range(n - 1)]
         e = _edges(spark, pairs).repartition(8)
-        st_alt = {}
-        alt = _as_map(connected_components_alternating(e, stats=st_alt))
-        assert len(set(alt.values())) == 1
-        assert set(alt.values()) == {"<n0000>"}
-        assert len(alt) == n
-        assert st_alt["iterations"] <= 12, st_alt
-        # min-label on a short sub-chain for equality check (full 1k chain
-        # would need 1k rounds)
-        sub = _edges(spark, pairs[:16])
-        st_ml = {}
-        ml = _as_map(connected_components(sub, stats=st_ml))
-        alt_sub = _as_map(connected_components_alternating(sub))
-        assert ml == alt_sub
+        stats = {}
+        cc = _as_map(connected_components(e, stats=stats))
+        assert set(cc.values()) == {"<n0000>"}
+        assert len(cc) == n
+        assert stats["iterations"] <= 12, stats
 
-    def test_minlabel_long_chain_one_component(self, spark):
-        # no round cap: a 60-edge chain needs 60 relaxations + the
-        # no-change round, and must not stop at a partial labelling
+    def test_long_chain_one_component(self, spark):
+        # no round cap, and no partial labelling: a 60-edge chain is one
+        # component, reached in a logarithmic number of rounds
         pairs = [(f"<n{i:02d}>", f"<n{i+1:02d}>") for i in range(60)]
         stats = {}
-        ml = _as_map(connected_components(_edges(spark, pairs), stats=stats))
-        assert set(ml.values()) == {"<n00>"} and len(ml) == 61
-        assert stats["iterations"] == 61
+        cc = _as_map(connected_components(_edges(spark, pairs), stats=stats))
+        assert set(cc.values()) == {"<n00>"} and len(cc) == 61
+        assert stats["iterations"] <= 8, stats
 
     def test_two_components_and_star(self, spark):
         pairs = [("<hub>", f"<s{i}>") for i in range(50)] + [("<x>", "<y>")]
-        e = _edges(spark, pairs)
-        alt = _as_map(connected_components_alternating(e))
-        assert alt["<x>"] == alt["<y>"] == "<x>"
-        assert {alt[f"<s{i}>"] for i in range(50)} == {"<hub>"}
+        cc = _as_map(connected_components(_edges(spark, pairs)))
+        assert cc["<x>"] == cc["<y>"] == "<x>"
+        assert {cc[f"<s{i}>"] for i in range(50)} == {"<hub>"}
 
 
 class TestCanonicalizeBroadcastRegimes:
+    """The component map is broadcast iff it has at most
+    ``BROADCAST_MAP_MAX_ROWS`` rows; the tests move the limit around the
+    2-row map to pin both sides of the boundary."""
+
     def _setup(self, spark):
         t = spark.createDataFrame(
             [("<a>", "<p>", "<b>"), ("<b>", "<p>", "<c>")],
@@ -80,26 +124,27 @@ class TestCanonicalizeBroadcastRegimes:
         )
         return t, comp
 
-    def test_broadcast_regime_plan(self, spark):
+    def test_broadcast_regime_plan(self, spark, monkeypatch):
         t, comp = self._setup(spark)
-        out = canonicalize_entities(t, comp, broadcast=True)
+        monkeypatch.setattr(linking, "BROADCAST_MAP_MAX_ROWS", 2)  # map at the limit
+        out = canonicalize_entities(t, comp)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
-        rows = {(r["s"], r["o"]) for r in out.collect()}
-        assert rows == {("<a>", "<a>"), ("<a>", "<a>")} or rows == {("<a>", "<a>")}
+        assert {(r["s"], r["o"]) for r in out.collect()} == {("<a>", "<a>")}
 
-    def test_shuffle_regime_plan(self, spark):
+    def test_shuffle_regime_plan(self, spark, monkeypatch):
         t, comp = self._setup(spark)
-        out = canonicalize_entities(t, comp, broadcast=False)
+        ref = canonicalize_entities(t, comp)
+        monkeypatch.setattr(linking, "BROADCAST_MAP_MAX_ROWS", 0)
+        out = canonicalize_entities(t, comp)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan or "AdaptiveSparkPlan" in plan
         # values identical in both regimes
-        ref = canonicalize_entities(t, comp, broadcast=True)
         assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
 
     def test_auto_small_map_broadcasts(self, spark):
         t, comp = self._setup(spark)
-        out = canonicalize_entities(t, comp)  # auto: 2 rows → broadcast
+        out = canonicalize_entities(t, comp)  # default limit: 2 rows → broadcast
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
 
@@ -118,11 +163,6 @@ FIXPOINTS = {
     "connected_components": (
         linking,
         lambda spark: connected_components(_edges(spark, CHAIN)),
-        lambda rows: {r["comp"] for r in rows} == {"<n0>"} and len(rows) == 9,
-    ),
-    "connected_components_alternating": (
-        linking,
-        lambda spark: connected_components_alternating(_edges(spark, CHAIN)),
         lambda rows: {r["comp"] for r in rows} == {"<n0>"} and len(rows) == 9,
     ),
     "transitive_closure": (
