@@ -244,6 +244,7 @@ def canonicalize_by_url(quads_df):
     vast majority, which keeps the per-group Python off the hot path."""
     import pandas as pd
     from pyspark.sql import functions as F
+    from .fixpoint import cut
 
     cols = ["url", "s", "p", "o", "g"]
     df = quads_df.select(*cols)
@@ -281,6 +282,5 @@ def canonicalize_by_url(quads_df):
         run, schema="url string, s string, p string, o string, g string"
     )
     # Materialized once where it is produced, so every sink shares one
-    # run of the blank-node joins and of RDFC.  A lost executor fails the
-    # job, as with the engine's other local checkpoints.
-    return passthrough.unionByName(relabeled).localCheckpoint(eager=False)
+    # run of the blank-node joins and of RDFC.
+    return cut(passthrough.unionByName(relabeled))

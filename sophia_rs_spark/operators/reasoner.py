@@ -414,6 +414,8 @@ def entails(
 
             bad = next(v for v in ill[0] if v and v.startswith(_ILL_MARK))
             raise IllTypedError(bad[len(_ILL_MARK):])
+        # Eager, not fixpoint.cut: B.bgp self-joins ``base`` inside one
+        # job, where a lazy cut would be computed once per scan.
         base = base.localCheckpoint(eager=True)
     rows = [(r[0], r[1], r[2]) for r in query.select("s", "p", "o").collect()]
     if d == "sparql":

@@ -13,12 +13,12 @@ ops that Catalyst/AQE optimize (predicate pushdown, partial aggregation,
 broadcast).
 
 The parse output is materialized once per pass: ``extract_quads``
-returns the ``mapInPandas`` output behind a lazy ``localCheckpoint``, so
+returns the ``mapInPandas`` output behind a lazy lineage cut, so
 every consumer (the quarantine split's good and bad sides, the sameAs
 edge scan, c14n, the sinks) reads the same materialized partitions
-instead of re-running the Python parse.  Like the engine's other local
-checkpoints, the cut keeps no lineage: losing an executor that holds
-checkpointed blocks fails the job rather than recomputing them.
+instead of re-running the Python parse.  The cut is
+:func:`..operators.fixpoint.cut`, whose docstring states what executor
+loss does to it.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import cut
 from ..sources.html_extract import extract_payloads
 from ..sources.ntparser import _OUT_COLS, parse_nx_batch
 
@@ -141,7 +142,7 @@ def extract_quads(
             yield out
 
     # materialized once per pass (see the module docstring)
-    return src.mapInPandas(run, schema=QUADS_SCHEMA).localCheckpoint(eager=False)
+    return cut(src.mapInPandas(run, schema=QUADS_SCHEMA))
 
 
 _FAST_PRE_RE = re.compile(

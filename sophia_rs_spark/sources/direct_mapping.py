@@ -13,12 +13,13 @@ concat, CAST of integer types) so the two sides agree byte-for-byte.
 
 from __future__ import annotations
 
-import weakref
 from dataclasses import dataclass, field
 from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plan_cache import listing, plan
 
 EX = "http://example.org/"
 VOC = EX + "voc#"
@@ -138,34 +139,25 @@ def table_triples(df: DataFrame, tm: TableMap) -> DataFrame:
     return out
 
 
-# r6: plan memo — building the union-of-mappings PLAN costs hundreds of
-# py4j round trips and parquet file-listings (~0.5s); repeated calls for
-# the same (session, dir, mappings) reuse the logical plan.  No data is
-# cached: the frame is pure narrow scans/projections (no shuffle), so
-# every downstream action re-reads the parquet files in full.
-_TRIPLES_PLANS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def spark_triples(
     spark: SparkSession, sf_dir: str, mappings: List[TableMap] = DEFAULT_MAPPINGS
 ) -> DataFrame:
-    """All mapped tables → one triples DataFrame (s, p, o)."""
-    try:
-        per = _TRIPLES_PLANS.setdefault(spark, {})
-        key = (sf_dir, repr(mappings))
-    except TypeError:
-        per, key = None, None
-    if per is not None and key in per:
-        return per[key]
-    out = None
-    for tm in mappings:
-        df = spark.read.parquet(f"{sf_dir}/{tm.table}.parquet")
-        t = table_triples(df, tm)
-        out = t if out is None else out.unionByName(t)
-    assert out is not None
-    if per is not None:
-        per[key] = out
-    return out
+    """All mapped tables → one triples DataFrame (s, p, o).  While every
+    table's local file listing is unchanged, repeated calls return the
+    same frame (:mod:`..plan_cache`), which holds no data: every action
+    re-reads the files.  A path ``os`` cannot list is never reused."""
+    paths = [f"{sf_dir}/{tm.table}.parquet" for tm in mappings]
+    listings = tuple(listing(p) for p in paths)
+
+    def build():
+        out = None
+        for tm, path in zip(mappings, paths):
+            t = table_triples(spark.read.parquet(path), tm)
+            out = t if out is None else out.unionByName(t)
+        assert out is not None
+        return out, None not in listings
+
+    return plan(spark, (sf_dir, repr(mappings), listings), build)
 
 
 # ---------------------------------------------------------------------------

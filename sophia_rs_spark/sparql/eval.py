@@ -43,8 +43,6 @@ import dataclasses
 import itertools
 import re
 import threading
-import weakref
-from collections import OrderedDict
 from typing import List, Optional, Union
 
 from pyspark.sql import Column, DataFrame
@@ -53,6 +51,7 @@ from pyspark.sql import functions as F
 from ..functions import sparql_fns as FN
 from ..operators import bgp as B
 from ..operators import paths as P
+from ..plan_cache import plan
 from ..terms.model import RDF as _RDF_NS
 from ..terms.model import XSD as _XSD_NS
 from . import parser as A
@@ -3009,23 +3008,6 @@ def _select_df(ctx: _Ctx, q: A.Query):
     return df, maybe & set(df.columns)
 
 
-# Prepared-plan cache (r6): building a large SELECT plan costs
-# thousands of synchronous py4j round trips (~3s for the headline
-# aggregate query — measured, call-count bound).  A repeated
-# (dataset, query-text) pair reuses the compiled LOGICAL PLAN, exactly
-# like a prepared statement in any database engine.  No data and no
-# results are cached: each call returns the plan wrapped in a fresh
-# ``where(TRUE)`` (optimized away), so the returned frame carries fresh
-# RDD lineage and every action recomputes from the sources — Spark
-# cannot skip shuffle stages of a previous run.  Plans that embed a
-# value computed at build time are never cached: ASK (a bool), SERVICE
-# (the remote results) and NOW() (the pinned instant), the last two
-# found in the parsed query.  Keyed weakly on the triples DataFrame
-# object so plans die with their dataset.
-_PREPARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_PREPARED_CAP = 32
-
-
 def _reads_outside(node) -> bool:
     """Does the parsed query (any sub-node) call SERVICE or NOW()?"""
     if isinstance(node, A.ServiceClause):
@@ -3045,26 +3027,16 @@ def _reads_outside(node) -> bool:
 
 def query(triples: DataFrame, text: str, base: Optional[str] = None):
     """One-call API: `SparqlWrapper(&dataset).query(q)` equivalent
-    (`sparql/src/wrapper.rs:20-85`).  Repeated identical query text
-    against the same dataset frame reuses the compiled plan (see
-    ``_PREPARED`` above); execution always recomputes."""
-    try:
-        per = _PREPARED.get(triples)
-        if per is None:
-            per = _PREPARED.setdefault(triples, OrderedDict())
-    except TypeError:  # unhashable/unweakrefable frame: just evaluate
-        return evaluate(triples, A.parse_query(text, base))
-    key = (text, base)
-    df = per.get(key)
-    if df is None:
+    (`sparql/src/wrapper.rs:20-85`).  Repeated ``(text, base)`` on the
+    same ``triples`` frame reuses its logical plan (:mod:`..plan_cache`)
+    behind a fresh ``where(TRUE)``, so every action recomputes.  ASK and
+    SERVICE or NOW() queries are not reused: their plans embed a value
+    computed at build time."""
+
+    def build():
         parsed = A.parse_query(text, base)
-        volatile = _reads_outside(parsed)
         df = evaluate(triples, parsed)
-        if volatile or not isinstance(df, DataFrame):
-            return df
-        per[key] = df
-        while len(per) > _PREPARED_CAP:
-            per.popitem(last=False)
-    else:
-        per.move_to_end(key)
-    return df.where(F.lit(True))
+        return df, isinstance(df, DataFrame) and not _reads_outside(parsed)
+
+    df = plan(triples, (text, base), build)
+    return df.where(F.lit(True)) if isinstance(df, DataFrame) else df

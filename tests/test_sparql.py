@@ -5,7 +5,7 @@ expected bindings as canonical term strings)."""
 import pytest
 from pyspark.sql import functions as F
 
-import sophia_rs_spark.sparql.eval as E
+from sophia_rs_spark import plan_cache
 from sophia_rs_spark.sparql import query
 from sophia_rs_spark.terms.model import XSD
 
@@ -1247,7 +1247,7 @@ def test_plan_cache_hit_recomputes(spark):
     triples = src.mapInPandas(count, schema=src.schema)
     text = "SELECT (SUM(?v) AS ?t) (COUNT(*) AS ?n) { ?s <x:v> ?v }"
     runs = [query(triples, text).collect() for _ in range(2)]
-    assert (text, None) in E._PREPARED[triples]  # the second run was a hit
+    assert (text, None) in plan_cache._PLANS[triples]  # the second run was a hit
     assert runs[0] == runs[1]
     assert runs[0][0]["t"] == xi % 45
     assert reads.value == 2 * 10
